@@ -336,10 +336,14 @@ def main() -> None:
     # like-for-like number against the serial DuckDB baseline), dropping
     # the smallest spans first if the line would still overflow. Dropped
     # entries are summed into queries_omitted_sec so the line stays
-    # self-consistent; BENCH_FULL.json always has everything.
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_FULL.json"), "w") as f:
-        json.dump(full, f, indent=1)
+    # self-consistent; BENCH_FULL.json always has everything. Every run
+    # overwrites BENCH_FULL.json; the BENCH_FULL_c{cpus}.json copy keeps
+    # runs at different core counts side by side.
+    here = os.path.dirname(os.path.abspath(__file__))
+    cpus = spark.sparkContext.defaultParallelism
+    for name in ("BENCH_FULL.json", f"BENCH_FULL_c{cpus}.json"):
+        with open(os.path.join(here, name), "w") as f:
+            json.dump(full, f, indent=1)
     line = dict(full)
     del line["serial_queries"]
     del line["duckdb_queries"]  # per-query duck spans live in BENCH_FULL.json

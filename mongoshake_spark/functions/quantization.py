@@ -47,6 +47,8 @@ never hash-shuffles.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -62,6 +64,14 @@ from mongoshake_spark.functions.similarity import (
 #: numbers them 0..k-1 and updates only re-emit existing ids), so any
 #: stride > k_code is collision-free; 1 << 20 leaves the bound loud.
 _LUT_STRIDE = 1 << 20
+
+#: row ceiling on each of :func:`ivfadc_score`'s driver collects (the
+#: centroid, query and codebook tables). That model math is
+#: driver-resident by design and MODEL-sized — |corpus|/centroid_mod
+#: cells, Q queries, m*k_code codewords — so a table above the ceiling
+#: is a corpus passed where a model belongs: it fails loudly instead of
+#: being collected (the ``retrieval._RANKED_TOPK_MAX_K`` contract).
+_IVFADC_MAX_ROWS = 10_000
 
 
 def _codebook_arr(codebooks: DataFrame) -> DataFrame:
@@ -667,10 +677,32 @@ def ivfadc_score(
     step performs the identical two roundings); subtraction, division
     and comparison are single IEEE ops on both sides; and the probe
     tie-break (cs desc, cid asc) is the same lexicographic order the old
-    row_number window used."""
+    row_number window used.
+
+    The build is EAGER: constructing the result runs three Spark jobs
+    (the centroid, query and codebook collects), so a caller pays them
+    even if it never executes the plan, and model errors surface here.
+    Each collect is capped at ``_IVFADC_MAX_ROWS`` rows (ValueError
+    above it). Inputs the driver folds cannot replay faithfully fail
+    loudly rather than rank differently from the old Spark plan: a zero
+    ``qnorm * cnorm`` (Spark: Inf/NaN, Python: ZeroDivisionError) and a
+    NaN probe score (Spark ranks NaN first, ``list.sort`` in an undefined
+    order) raise ValueError naming the query and centroid ids. Callers
+    going through ``with_norm`` (drop_zero=True) never hit either."""
     if rerank is not None and unit is None:
         raise ValueError("ivfadc_score: rerank needs the raw-vector table")
     spark = codes.sparkSession
+
+    def _collect(df, what):
+        rows = df.limit(_IVFADC_MAX_ROWS + 1).collect()
+        if len(rows) > _IVFADC_MAX_ROWS:
+            raise ValueError(
+                f"ivfadc_score: {what} table exceeds the driver-residency "
+                f"ceiling of {_IVFADC_MAX_ROWS} rows — the model tables are "
+                "collected to the driver by design; pass model-sized tables "
+                "(e.g. a larger centroid_mod)"
+            )
+        return rows
 
     def _dot(a, b):
         acc = 0.0
@@ -678,9 +710,9 @@ def ivfadc_score(
             acc = acc + float(x) * float(y)
         return acc
 
-    cent_rows = cents.select("cid", "cvec", "cnorm").collect()
-    q_rows = queries.collect()
-    cb_rows = codebooks.select("sub", "cluster", "centroid").collect()
+    cent_rows = _collect(cents.select("cid", "cvec", "cnorm"), "centroid")
+    q_rows = _collect(queries, "query")
+    cb_rows = _collect(codebooks.select("sub", "cluster", "centroid"), "codebook")
     by_sub: dict[int, list] = {}
     for r in cb_rows:
         by_sub.setdefault(int(r["sub"]), []).append(r)
@@ -700,13 +732,26 @@ def ivfadc_score(
                 )
         return out
 
+    def _probe_score(q, c):
+        den = float(q["qnorm"]) * float(c["cnorm"])
+        if den == 0.0:
+            raise ValueError(
+                f"ivfadc_score: zero norm for query_id={q['query_id']!r} "
+                f"x centroid cid={c['cid']!r} — cosine is undefined; drop "
+                "zero vectors first (with_norm drop_zero=True)"
+            )
+        cs = _dot(q["qvec"], c["cvec"]) / den
+        if math.isnan(cs):
+            raise ValueError(
+                f"ivfadc_score: NaN probe score for query_id={q['query_id']!r} "
+                f"x centroid cid={c['cid']!r} — a NaN in a vector or its norm"
+            )
+        return cs
+
     probed: dict = {}  # cell -> [(query_id, lut, q_dot_c, cnorm, qnorm)]
     for q in q_rows:
         qvec, qnorm = q["qvec"], float(q["qnorm"])
-        scored = [
-            (_dot(qvec, c["cvec"]) / (qnorm * float(c["cnorm"])), c["cid"])
-            for c in cent_rows
-        ]
+        scored = [(_probe_score(q, c), c["cid"]) for c in cent_rows]
         # top n_probe by (cs desc, cid asc) — row_number's tie-break
         scored.sort(key=lambda t: (-t[0], t[1]))
         for _cs, cid in scored[:n_probe]:

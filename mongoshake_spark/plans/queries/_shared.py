@@ -130,7 +130,8 @@ def _write_class_feed(df, class_expr, n_classes: int, feed_dir: str, tmp: str):
     source admits oldest-first)."""
     import os
     import shutil
-    import time
+
+    from mongoshake_spark.streaming.replay import stamp_replay_order
 
     d = os.path.join(tmp, "_classes")
     (
@@ -155,9 +156,7 @@ def _write_class_feed(df, class_expr, n_classes: int, feed_dir: str, tmp: str):
             ) from None
         os.replace(os.path.join(cdir, part), f"{feed_dir}/class{i}.parquet")
     shutil.rmtree(d, ignore_errors=True)
-    t0 = time.time() - n_classes - 10
-    for i in range(n_classes):
-        os.utime(f"{feed_dir}/class{i}.parquet", (t0 + i, t0 + i))
+    stamp_replay_order([f"{feed_dir}/class{i}.parquet" for i in range(n_classes)])
 
 
 _POLY_SHINGLE = poly_hash_duckdb("shingle")

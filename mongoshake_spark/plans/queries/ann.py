@@ -13,6 +13,7 @@ from mongoshake_spark.plans.queries._shared import (  # noqa: F401
     load_table,
     similarity,
 )
+from mongoshake_spark.streaming.replay import drain, read_feed, shuffle_partitions
 
 
 
@@ -689,30 +690,21 @@ def stream_ann_ingest_q(spark, sf_dir):
     # 32 near-empty shuffle tasks per Lloyd/score stage are pure
     # scheduling overhead at ANY corpus size — same override as
     # stream_dedup; the map-only encode stages keep full scan width
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        ann_index_bootstrap(vecs, index_dir, m=4, k_code=8, iters=2)
-        _write_class_feed(vecs, F.col("vec_id") % 3, 3, feed_dir, tmp)
-        stream = (
-            spark.readStream.schema(vecs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed_dir)
-        )
-        q = streaming_ann_ingest(stream, index_dir, ckpt_dir)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("ann ingest stream drain timed out")
-        out = ann_index_topk(
-            spark,
-            index_dir,
-            vecs.filter(F.col("vec_id") < 10),
-            k=5,
-            n_probe=2,
-        )
-        return out.orderBy("query_id", "rank").localCheckpoint(eager=True)
+        with shuffle_partitions(spark, 8):
+            ann_index_bootstrap(vecs, index_dir, m=4, k_code=8, iters=2)
+            _write_class_feed(vecs, F.col("vec_id") % 3, 3, feed_dir, tmp)
+            drain(
+                streaming_ann_ingest(
+                    read_feed(spark, feed_dir, vecs.schema), index_dir, ckpt_dir
+                ),
+                600,
+            )
+            out = ann_index_topk(
+                spark, index_dir, vecs.filter(F.col("vec_id") < 10), k=5, n_probe=2
+            )
+            return out.orderBy("query_id", "rank").localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -740,7 +732,6 @@ def stream_ann_ingest_q(spark, sf_dir):
 def stream_ann_compaction_q(spark, sf_dir):
     import os
     import shutil
-    import time
 
     from mongoshake_spark.streaming.ann_ingest import (
         ann_index_bootstrap,
@@ -755,46 +746,36 @@ def stream_ann_compaction_q(spark, sf_dir):
     vecs = load_table(spark, sf_dir, "embeddings")
     tmp = _stream_tmpdir("annlc_")
     feed_dir, index_dir = f"{tmp}/feed", f"{tmp}/index"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        ann_index_bootstrap(vecs, index_dir, m=4, k_code=8, iters=2)
-        os.makedirs(feed_dir, exist_ok=True)
-        d = f"{tmp}/b0"
-        vecs.coalesce(1).write.mode("overwrite").parquet(d)
-        part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
-        os.replace(os.path.join(d, part), f"{feed_dir}/c0.parquet")
-        os.utime(f"{feed_dir}/c0.parquet", (time.time() - 10,) * 2)
-
-        stream = spark.readStream.schema(vecs.schema).parquet(feed_dir)
-        q = streaming_ann_ingest(stream, index_dir, f"{tmp}/ck1")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("ann lifecycle drain timed out")
-        # crash-replay worst case: every code row appended a second time
-        # (byte-identical rows — what a replayed feed writes; the actual
-        # via-checkpoint replay is pinned in tests/test_index_lifecycle)
-        codes_path = os.path.join(index_dir, "codes")
-        spark.read.parquet(codes_path).localCheckpoint(eager=True).write.mode(
-            "append"
-        ).parquet(codes_path)
-        stats = compact_ann_store(spark, index_dir)
-        if stats["rows_after"] * 2 != stats["rows_before"]:
-            raise RuntimeError(
-                f"compaction did not halve the replay-doubled store: {stats}"
+        with shuffle_partitions(spark, 8):
+            ann_index_bootstrap(vecs, index_dir, m=4, k_code=8, iters=2)
+            # the whole corpus as ONE feed file: one micro-batch
+            _write_class_feed(vecs, F.lit(0), 1, feed_dir, tmp)
+            drain(
+                streaming_ann_ingest(
+                    read_feed(spark, feed_dir, vecs.schema), index_dir, f"{tmp}/ck1"
+                ),
+                600,
             )
-        if read_current(index_dir) != stats["generation"]:
-            raise RuntimeError("generation pointer did not cut over")
-        out = ann_index_topk(
-            spark,
-            index_dir,
-            vecs.filter(F.col("vec_id") < 10),
-            k=5,
-            n_probe=2,
-        )
-        return out.orderBy("query_id", "rank").localCheckpoint(eager=True)
+            # crash-replay worst case: every code row appended a second time
+            # (byte-identical rows — what a replayed feed writes; the actual
+            # via-checkpoint replay is pinned in tests/test_index_lifecycle)
+            codes_path = os.path.join(index_dir, "codes")
+            spark.read.parquet(codes_path).localCheckpoint(eager=True).write.mode(
+                "append"
+            ).parquet(codes_path)
+            stats = compact_ann_store(spark, index_dir)
+            if stats["rows_after"] * 2 != stats["rows_before"]:
+                raise RuntimeError(
+                    f"compaction did not halve the replay-doubled store: {stats}"
+                )
+            if read_current(index_dir) != stats["generation"]:
+                raise RuntimeError("generation pointer did not cut over")
+            out = ann_index_topk(
+                spark, index_dir, vecs.filter(F.col("vec_id") < 10), k=5, n_probe=2
+            )
+            return out.orderBy("query_id", "rank").localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(tmp, ignore_errors=True)
 
 

@@ -21,6 +21,12 @@ from mongoshake_spark.plans.queries._shared import (  # noqa: F401
     range_scan,
     transforms,
 )
+from mongoshake_spark.streaming.replay import (
+    drain,
+    read_feed,
+    shuffle_partitions,
+    write_ordered_feed,
+)
 
 
 
@@ -900,10 +906,7 @@ def q31(spark, sf_dir):
     ran 6 files, buying nothing the 3-file replay doesn't assert),
     reassembles with the stateful operator, and returns the emitted op
     sequence."""
-    import os
     import shutil
-    import tempfile
-    import time
 
     from mongoshake_spark.streaming.txn import reassemble_transactions
 
@@ -934,45 +937,21 @@ def q31(spark, sf_dir):
     tmp = _stream_tmpdir("q31_")
     feed_dir, ckpt_dir = f"{tmp}/feed", f"{tmp}/ckpt"
     try:
-        (
-            feed.repartitionByRange(3, "seq")
-            .sortWithinPartitions("seq")
-            .write.mode("overwrite")
-            .parquet(feed_dir)
-        )
-        # file source admits oldest-mtime-first; stamp range order so the
-        # replay is the oplog order (a commit seen before its chunks would
-        # drop the transaction)
-        parts = sorted(f for f in os.listdir(feed_dir) if f.endswith(".parquet"))
-        t0 = time.time() - len(parts) - 10
-        for i, f in enumerate(parts):
-            os.utime(os.path.join(feed_dir, f), (t0 + i, t0 + i))
-        stream = (
-            spark.readStream.schema(feed.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed_dir)
-        )
+        # range order = oplog order: a commit replayed before its chunks
+        # would drop the transaction
+        write_ordered_feed(feed, feed_dir, 3, "seq")
         out_dir = f"{tmp}/out"
         # 4 state-store partitions instead of the session's 32: per-batch
         # cost of a stateful stream scales with store instances, and this
         # bounded drain runs 3 micro-batches over a small session-key space
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            q = (
-                reassemble_transactions(stream)
-                .writeStream.outputMode("append")
-                .format("parquet")
+        with shuffle_partitions(spark, 4):
+            drain(
+                reassemble_transactions(read_feed(spark, feed_dir, feed.schema))
+                .writeStream.format("parquet")
                 .option("path", out_dir)
-                .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
+                .option("checkpointLocation", ckpt_dir),
+                600,
             )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("stream drain timed out")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         # emitted rows flow executor->sink->scan, never through the driver;
         # the eager localCheckpoint detaches the result from the temp dir
         # (deleted below) while keeping the rows in distributed blocks
@@ -1170,7 +1149,6 @@ WHERE last_op <> 'd' ORDER BY ns, user_id""",
 )
 def q37_multi_ns(spark, sf_dir):
     import os
-    import time
 
     from mongoshake_spark.streaming.multi import run_multi_incr_sync
 
@@ -1182,25 +1160,12 @@ def q37_multi_ns(spark, sf_dir):
     )
     tmp = _stream_tmpdir("q37_")
     feed, root, ckpt = (os.path.join(tmp, d) for d in ("feed", "root", "ck"))
-    (
-        two_ns.repartitionByRange(2, "ts", "id")
-        .sortWithinPartitions("ts", "id")
-        .write.parquet(feed)
-    )
-    # the file stream admits oldest-mtime-first; one write job shares an
-    # mtime — stamp range order so replay follows the oplog order the
-    # kernel's compaction watermark assumes (see write_replay_feed)
-    parts = sorted(f for f in os.listdir(feed) if f.endswith(".parquet"))
-    base = time.time() - len(parts) - 10
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(feed, f), (base + i, base + i))
+    write_ordered_feed(two_ns, feed, 2, "ts", "id")
     # 8 shuffle partitions for the drain: each micro-batch runs one MERGE
     # cycle per touched namespace and the per-cycle constant scales with
     # partition count, not rows, at this feed size (same sizing rule as
     # the other bounded stream drains)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_partitions(spark, 8):
         # n_buckets sized to the fixture like shuffle partitions: each
         # flush rewrites every touched bucket file, and at ~3.5k keys
         # per namespace 8 buckets keeps the per-batch file I/O constant
@@ -1209,8 +1174,6 @@ def q37_multi_ns(spark, sf_dir):
         multi = run_multi_incr_sync(
             spark, feed, root, ckpt, max_files_per_trigger=1, n_buckets=8
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     out = None
     for ns in sorted(multi.kernels):
         part = (
@@ -1385,13 +1348,9 @@ def q40_receiver_daemon(spark, sf_dir):
         raise RuntimeError("q40: receiver did not bind within 30s")
     # 8 shuffle partitions for the apply drain, the same per-MERGE-cycle
     # constant sizing every bounded stream drain here uses
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_partitions(spark, 8):
         st.write_socket_tunnel(ov, "127.0.0.1", box["port"], batch_size=4096)
         th.join(120)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     if th.is_alive():
         raise RuntimeError("q40: receiver did not drain within 120s")
     return (

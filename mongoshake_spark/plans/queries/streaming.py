@@ -12,6 +12,12 @@ from mongoshake_spark.plans.queries._shared import (  # noqa: F401
     load_table,
     merge,
 )
+from mongoshake_spark.streaming.replay import (
+    drain,
+    read_feed,
+    shuffle_partitions,
+    write_ordered_feed,
+)
 
 
 
@@ -60,29 +66,16 @@ def stream_dedup_q(spark, sf_dir):
         _write_class_feed(
             docs, F.col("doc_id") >= shift, 2, feed_dir, tmp
         )
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed_dir)
-        )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
+        stream = read_feed(spark, feed_dir, docs.schema)
+        with shuffle_partitions(spark, 8):
+            drain(
                 stream_exact_dedup(stream, watermark="10 hours")
                 .select("text_hash")
-                .writeStream.outputMode("append")
-                .format("parquet")
+                .writeStream.format("parquet")
                 .option("path", out_dir)
-                .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
+                .option("checkpointLocation", ckpt_dir),
+                600,
             )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("stream drain timed out")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         return (
             spark.read.parquet(out_dir)
             .select("text_hash")
@@ -122,10 +115,6 @@ FROM s GROUP BY user_id, session_no ORDER BY user_id, session_start""",
     stream=True,
 )
 def session_window_stream_q(spark, sf_dir):
-    import os
-    import tempfile
-    import time
-
     from mongoshake_spark.streaming.windows import session_counts
 
     ev = (
@@ -153,44 +142,19 @@ def session_window_stream_q(spark, sf_dir):
     sentinel = spark.createDataFrame(
         [(-1, -1, sentinel_ts)], "user_id bigint, event_id bigint, ts timestamp"
     )
-    (
-        ev.unionByName(sentinel)
-        .repartitionByRange(2, "ts")
-        .sortWithinPartitions("ts")
-        .write.mode("overwrite")
-        .parquet(feed_dir)
-    )
-    # mtime order = replay order: ascending ts ranges (range partition i
-    # is written as part-i, so lexical order IS range order)
-    parts = sorted(
-        f for f in os.listdir(feed_dir) if f.endswith(".parquet")
-    )
-    t0 = time.time() - len(parts) - 10
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(feed_dir, f), (t0 + i, t0 + i))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            session_counts(stream, gap="12 hours", watermark="2 hours")
-            .writeStream.outputMode("append")
-            .format("parquet")
+    write_ordered_feed(ev.unionByName(sentinel), feed_dir, 2, "ts")
+    with shuffle_partitions(spark, 4):
+        drain(
+            session_counts(
+                read_feed(spark, feed_dir, ev.schema),
+                gap="12 hours",
+                watermark="2 hours",
+            )
+            .writeStream.format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt_dir),
+            300,
         )
-        if not q.awaitTermination(300):
-            # a wedged drain must not be read as a (short) result
-            q.stop()
-            raise RuntimeError("session_window_stream: drain timed out")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         spark.read.parquet(out_dir)
         .filter(F.col("user_id") >= 0)  # the sentinel's session stays open
@@ -215,37 +179,21 @@ GROUP BY 1 ORDER BY 1""",
     stream=True,
 )
 def stream_static_enrich_q(spark, sf_dir):
-    import os
-    import time
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     tmp = _stream_tmpdir("senrich_")
     feed_dir, ckpt_dir, out_dir = f"{tmp}/feed", f"{tmp}/ckpt", f"{tmp}/out"
-    ev.repartitionByRange(2, "event_id").write.mode("overwrite").parquet(feed_dir)
-    parts = sorted(f for f in os.listdir(feed_dir) if f.endswith(".parquet"))
-    t0 = time.time() - len(parts) - 10
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(feed_dir, f), (t0 + i, t0 + i))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
+    write_ordered_feed(ev, feed_dir, 2, "event_id")
+    stream = read_feed(spark, feed_dir, ev.schema)
     enriched = stream.join(
         F.broadcast(dim), stream["user_id"] == dim["c_custkey"], "left"
     ).select("event_id", "user_id", "c_mktsegment")
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("parquet")
+    drain(
+        enriched.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt_dir),
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("stream_static_enrich: drain timed out")
     return (
         spark.read.parquet(out_dir)
         .groupBy(
@@ -276,7 +224,6 @@ GROUP BY 1 ORDER BY 1""",
 )
 def stream_join_q(spark, sf_dir):
     import os
-    import time
 
     from mongoshake_spark.streaming.joins import stream_interval_join
 
@@ -298,47 +245,26 @@ def stream_join_q(spark, sf_dir):
     ldir, rdir, ck, out = (
         os.path.join(tmp, d) for d in ("left", "right", "ck", "out")
     )
-    for df, feed, ts in ((lt, ldir, "l_ts"), (rt, rdir, "r_ts")):
-        df.repartitionByRange(2, ts).sortWithinPartitions(ts).write.parquet(feed)
-        parts = sorted(f for f in os.listdir(feed) if f.endswith(".parquet"))
-        base = time.time() - len(parts) - 10
-        for i, f in enumerate(parts):
-            os.utime(os.path.join(feed, f), (base + i, base + i))
-    ls = (
-        spark.readStream.schema(lt.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ldir)
-    )
-    rs = (
-        spark.readStream.schema(rt.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(rdir)
-    )
+    write_ordered_feed(lt, ldir, 2, "l_ts")
+    write_ordered_feed(rt, rdir, 2, "r_ts")
     joined = stream_interval_join(
-        ls, rs, "user_id", "l_ts", "r_ts", 0, 1800, watermark="720 hours"
+        read_feed(spark, ldir, lt.schema),
+        read_feed(spark, rdir, rt.schema),
+        "user_id", "l_ts", "r_ts", 0, 1800, watermark="720 hours",
     )
     # 4 state-store partitions instead of the session's 32: a
     # stream-stream join keeps TWO stores per partition and commits all
     # of them every micro-batch — per-batch wall scales with store
     # instances, not data, on this bounded drain (same sizing rule as
     # q31/stream_dedup/session_window_stream)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
+    with shuffle_partitions(spark, 4):
+        drain(
             joined.select("user_id", "l_id", "r_id")
-            .writeStream.outputMode("append")
-            .format("parquet")
+            .writeStream.format("parquet")
             .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ck),
+            300,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("stream_join: drain timed out")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         spark.read.parquet(out)
         .groupBy("user_id")
@@ -387,14 +313,10 @@ def stream_neardup_q(spark, sf_dir):
     # one feed file per arrival class, mtime-stamped so the tail admits
     # them in class order (the replay convention, see write_replay_feed)
     _write_class_feed(docs, F.col("doc_id") % 2, 2, feed, tmp)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_partitions(spark, 8):
         pairs = run_streaming_lsh_dedup(
             spark, feed, "doc_id bigint, text string", os.path.join(tmp, "w")
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return pairs.orderBy("origin", "doc_a", "doc_b").localCheckpoint(
         eager=True
     )
@@ -431,17 +353,13 @@ def stream_media_neardup_q(spark, sf_dir):
     feed_dir = f"{tmp}/feed"
     try:
         _write_class_feed(media, F.col("doc_id") % 2, 2, feed_dir, tmp)
-        stream = (
-            spark.readStream.schema(media.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed_dir)
+        drain(
+            streaming_phash_dedup(
+                read_feed(spark, feed_dir, media.schema),
+                f"{tmp}/index", f"{tmp}/pairs", f"{tmp}/ckpt",
+            ),
+            600,
         )
-        q = streaming_phash_dedup(
-            stream, f"{tmp}/index", f"{tmp}/pairs", f"{tmp}/ckpt"
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("media neardup stream drain timed out")
         return (
             spark.read.parquet(f"{tmp}/pairs")
             .select("doc_a", "doc_b", "hamming")

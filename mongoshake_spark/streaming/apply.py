@@ -635,25 +635,16 @@ def drain_feed(
     max_files_per_trigger: int = 1,
     timeout_sec: float = 300.0,
 ) -> None:
-    """The bounded-drain scaffolding shared by the single-table and
-    multi-namespace entry points: availableNow run of the replay feed
-    through ``process_batch`` under one checkpoint. On timeout the query
-    is STOPPED and TimeoutError raised — returning while process_batch
-    is still flushing in the background would hand the caller torn state
-    and leak a running query (the checkpoint makes a re-run resume
-    cleanly)."""
-    from mongoshake_spark.streaming.replay import read_oplog_stream
+    """The bounded drain shared by the single-table and multi-namespace
+    entry points: availableNow run of the replay feed through
+    ``process_batch`` under one checkpoint (timeout contract: see
+    ``replay.drain``)."""
+    from mongoshake_spark.streaming.replay import drain, read_feed
 
-    stream = read_oplog_stream(spark, feed_dir, max_files_per_trigger)
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    stream = read_feed(spark, feed_dir, max_files_per_trigger=max_files_per_trigger)
+    drain(
+        stream.writeStream.foreachBatch(process_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        timeout_sec,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"incremental sync did not drain within {timeout_sec}s; "
-            "stream stopped — re-run to resume from the checkpoint"
-        )

@@ -36,12 +36,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from mongoshake_spark.functions.dedup import (
     incremental_minhash_pairs,
     minhash_bands,
 )
 from mongoshake_spark.streaming.index_lifecycle import resolve_store
+from mongoshake_spark.streaming.replay import drain, read_feed
 
 
 def streaming_lsh_dedup(
@@ -50,10 +52,10 @@ def streaming_lsh_dedup(
     pairs_dir: str,
     checkpoint_dir: str,
     text_col: str = "text",
-    trigger_available_now: bool = True,
-):
-    """Start the ingest-time near-dup stream over ``stream`` (a streaming
-    DataFrame of documents). Returns the started StreamingQuery; pairs
+) -> DataStreamWriter:
+    """The ingest-time near-dup stream over ``stream`` (a streaming
+    DataFrame of documents), as an unstarted writer: hand it to
+    ``replay.drain`` for a bounded run or ``.start()`` it. Pairs
     accumulate under ``pairs_dir`` as ``(doc_a, doc_b, origin,
     batch_id)``, the band index under ``index_dir``."""
     spark = stream.sparkSession
@@ -121,12 +123,9 @@ def streaming_lsh_dedup(
         # growing an index whose pairs were never reported
         inc_bands.write.mode("append").parquet(idx)
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
+    return stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _index_exists(index_dir: str) -> bool:
@@ -151,15 +150,8 @@ def run_streaming_lsh_dedup(
     index_dir, pairs_dir, ckpt = (
         os.path.join(work_dir, d) for d in ("index", "pairs", "ck")
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(feed_dir)
-    )
-    q = streaming_lsh_dedup(stream, index_dir, pairs_dir, ckpt, text_col)
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise RuntimeError("streaming_lsh_dedup: drain timed out")
+    stream = read_feed(spark, feed_dir, schema, max_files_per_trigger)
+    drain(streaming_lsh_dedup(stream, index_dir, pairs_dir, ckpt, text_col), timeout_sec)
     return spark.read.parquet(pairs_dir).select("doc_a", "doc_b", "origin").distinct()
 
 
@@ -170,8 +162,7 @@ def streaming_phash_dedup(
     checkpoint_dir: str,
     decoder: str = "fake",
     max_hamming: int = 3,
-    trigger_available_now: bool = True,
-):
+) -> DataStreamWriter:
     """MEDIA twin of :func:`streaming_lsh_dedup`: ingest-time perceptual
     near-dup over a media stream. Per micro-batch: fingerprint each
     payload (operators/multimodal.phash64), band the 64-bit hashes with
@@ -240,9 +231,6 @@ def streaming_phash_dedup(
         # index append LAST (crash => batch replays => same pairs re-emit)
         bands.write.mode("append").parquet(idx)
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
+    return stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mongoshake_spark.streaming import index_lifecycle as lc
+from mongoshake_spark.streaming import replay
 
 
 def _feed_file(df, tmp_path, feed, name):
@@ -54,13 +55,11 @@ def test_band_index_compaction_survives_restart_and_cutover(spark, tmp_path):
         _feed_file(docs.filter(F.col("doc_id") % 2 == i), tmp_path, feed, f"c{i}")
 
     def drain(ck):
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+        stream = replay.read_feed(spark, feed, docs.schema)
+        replay.drain(
+            streaming_lsh_dedup(stream, index_dir, pairs_dir, str(tmp_path / ck)),
+            300,
         )
-        q = streaming_lsh_dedup(stream, index_dir, pairs_dir, str(tmp_path / ck))
-        assert q.awaitTermination(300)
 
     drain("ck1")
     drain("ck2")  # full replay: every band row appended twice
@@ -113,10 +112,12 @@ def test_band_index_retention_predicate(spark, tmp_path):
     index_dir = str(tmp_path / "index")
     _feed_file(docs, tmp_path, feed, "c0")
     stream = spark.readStream.schema(docs.schema).parquet(feed)
-    q = streaming_lsh_dedup(
-        stream, index_dir, str(tmp_path / "pairs"), str(tmp_path / "ck")
+    replay.drain(
+        streaming_lsh_dedup(
+            stream, index_dir, str(tmp_path / "pairs"), str(tmp_path / "ck")
+        ),
+        300,
     )
-    assert q.awaitTermination(300)
     stats = lc.compact_band_index(spark, index_dir, retention="doc_id >= 50")
     kept = spark.read.parquet(lc.resolve_store(index_dir))
     assert kept.filter(F.col("doc_id") < 50).count() == 0
@@ -130,13 +131,8 @@ def _vecs(spark):
 def _drain_ann(spark, vecs, feed, index_dir, ck):
     from mongoshake_spark.streaming.ann_ingest import streaming_ann_ingest
 
-    stream = (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    q = streaming_ann_ingest(stream, index_dir, ck)
-    assert q.awaitTermination(600)
+    stream = replay.read_feed(spark, feed, vecs.schema)
+    replay.drain(streaming_ann_ingest(stream, index_dir, ck), 600)
 
 
 def test_ann_store_compaction_preserves_probe(spark, tmp_path):
@@ -197,14 +193,10 @@ def test_ann_generation_guard_fails_loudly_then_restart_resumes(
     ck = str(tmp_path / "ck")
     ann_index_bootstrap(vecs, index_dir, m=4, k_code=8, iters=2)
     _feed_file(vecs.filter(F.col("vec_id") % 2 == 0), tmp_path, feed, "c0")
-    stream = (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    q = streaming_ann_ingest(
-        stream, index_dir, ck, trigger_available_now=False
-    )
+    stream = replay.read_feed(spark, feed, vecs.schema)
+    # long-running (default trigger): the stream must still be live when
+    # the cutover lands, so it is started here rather than drained
+    q = streaming_ann_ingest(stream, index_dir, ck).start()
     try:
         deadline = time.time() + 300
         codes_flat = os.path.join(index_dir, "codes")

@@ -806,3 +806,57 @@ def test_inrow_assignment_plans_are_map_only(spark):
     )
     cell = assign_nearest_centroid(unit, cents)
     assert "hashpartitioning" not in plan(cell)
+
+
+def _ivfadc_model(spark, cents):
+    """One-subspace (m=1, d=2) IVFADC model around ``cents``: a single
+    zero codeword, one coded vector in cell 0, one query along x."""
+    codebooks = spark.createDataFrame(
+        [(0, 0, [0.0, 0.0])], "sub int, cluster int, centroid array<double>"
+    )
+    codes = spark.createDataFrame(
+        [(100, 0, [0])], "vec_id bigint, cell bigint, codes array<int>"
+    )
+    queries = spark.createDataFrame(
+        [(7, [1.0, 0.0], 1.0)], "query_id bigint, qvec array<double>, qnorm double"
+    )
+    from mongoshake_spark.functions.quantization import ivfadc_score
+
+    return ivfadc_score(codes, cents, codebooks, queries, m=1, d=2, k=1, n_probe=1)
+
+
+def _ivfadc_cents(spark, n):
+    """``n`` centroids near the x axis; cid 0 = (1, 0) is the query's
+    nearest cell."""
+    x = F.col("id") * 1e-3
+    return spark.range(n).select(
+        F.col("id").alias("cid"),
+        F.array(F.lit(1.0), x).alias("cvec"),
+        F.sqrt(1.0 + x * x).alias("cnorm"),
+    )
+
+
+def test_ivfadc_score_collect_ceiling(spark):
+    """The driver collects are capped at _IVFADC_MAX_ROWS: a centroid
+    table AT the ceiling builds and scores, one row more fails loudly
+    before anything is scored."""
+    from mongoshake_spark.functions.quantization import _IVFADC_MAX_ROWS
+
+    got = _ivfadc_model(spark, _ivfadc_cents(spark, _IVFADC_MAX_ROWS)).collect()
+    assert [tuple(r) for r in got] == [(7, 100, 1, 1.0)]
+    with pytest.raises(ValueError, match="centroid table exceeds"):
+        _ivfadc_model(spark, _ivfadc_cents(spark, _IVFADC_MAX_ROWS + 1))
+
+
+def test_ivfadc_score_degenerate_norms_fail_loudly(spark):
+    """A zero-norm centroid (0/0 cosine) and a NaN score raise ValueError
+    naming the ids, instead of ZeroDivisionError or an undefined sort."""
+    schema = "cid bigint, cvec array<double>, cnorm double"
+    zero = spark.createDataFrame([(0, [1.0, 0.0], 1.0), (5, [0.0, 0.0], 0.0)], schema)
+    with pytest.raises(ValueError, match=r"zero norm for query_id=7 x centroid cid=5"):
+        _ivfadc_model(spark, zero)
+    nan = spark.createDataFrame(
+        [(0, [1.0, 0.0], 1.0), (6, [float("nan"), 0.0], 1.0)], schema
+    )
+    with pytest.raises(ValueError, match=r"NaN probe score for query_id=7 x centroid cid=6"):
+        _ivfadc_model(spark, nan)

@@ -11,7 +11,14 @@ from mongoshake_spark.operators import merge
 from mongoshake_spark.sources.oplog import oplog_view
 from mongoshake_spark.sources.tables import load_table
 from mongoshake_spark.streaming.apply import ApplyKernel, run_incr_sync
-from mongoshake_spark.streaming.replay import read_oplog_stream, write_replay_feed
+from mongoshake_spark.streaming.replay import (
+    drain,
+    read_feed,
+    read_oplog_stream,
+    shuffle_partitions,
+    write_ordered_feed,
+    write_replay_feed,
+)
 
 
 @pytest.fixture(scope="module")
@@ -707,22 +714,7 @@ def test_multi_table_apply_routes_per_namespace(spark, sf_dir, tmp_path):
         ),
     )
     feed = str(tmp_path / "feed")
-    (
-        two_ns.repartitionByRange(4, "ts", "id")
-        .sortWithinPartitions("ts", "id")
-        .write.parquet(feed)
-    )
-    # the file stream admits oldest-mtime-first and one write job shares
-    # an mtime: stamp range order like write_replay_feed does, or the
-    # replay order (and the kernel's compaction watermark assumption)
-    # is arbitrary
-    import os as _os
-    import time as _time
-
-    parts = sorted(f for f in _os.listdir(feed) if f.endswith(".parquet"))
-    base = _time.time() - len(parts) - 10
-    for i, f in enumerate(parts):
-        _os.utime(_os.path.join(feed, f), (base + i, base + i))
+    write_ordered_feed(two_ns, feed, 4, "ts", "id")
     multi = run_multi_incr_sync(
         spark, feed, str(tmp_path / "root"), str(tmp_path / "ck"),
         max_files_per_trigger=1,
@@ -1316,16 +1308,10 @@ def test_ann_ingest_store_matches_batch_and_is_replay_idempotent(
         part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
         os.replace(os.path.join(d, part), f"{feed}/c{i}.parquet")
 
-    def drain(ckpt):
-        stream = (
-            spark.readStream.schema(vecs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        q = streaming_ann_ingest(stream, idx, ckpt)
-        assert q.awaitTermination(300)
+    def ingest(ckpt):
+        drain(streaming_ann_ingest(read_feed(spark, feed, vecs.schema), idx, ckpt), 300)
 
-    drain(str(tmp_path / "ckpt1"))
+    ingest(str(tmp_path / "ckpt1"))
     queries = vecs.filter(F.col("vec_id") < 5)
     got1 = sorted(
         tuple(r) for r in ann_index_topk(spark, idx, queries, k=5, n_probe=2).collect()
@@ -1338,7 +1324,7 @@ def test_ann_ingest_store_matches_batch_and_is_replay_idempotent(
     )
     assert got1 == want and len(got1) == 25
     # replay: fresh checkpoint reprocesses every file -> duplicate appends
-    drain(str(tmp_path / "ckpt2"))
+    ingest(str(tmp_path / "ckpt2"))
     got2 = sorted(
         tuple(r) for r in ann_index_topk(spark, idx, queries, k=5, n_probe=2).collect()
     )
@@ -1397,18 +1383,16 @@ def test_streaming_phash_dedup_matches_batch_and_replays_idempotently(
         part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
         os.replace(os.path.join(d, part), f"{feed}/c{i}.parquet")
 
-    def drain(ck):
-        stream = (
-            spark.readStream.schema(media.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+    def ingest(ck):
+        drain(
+            streaming_phash_dedup(
+                read_feed(spark, feed, media.schema),
+                str(tmp_path / "index"), str(tmp_path / "pairs"), ck,
+            ),
+            300,
         )
-        q = streaming_phash_dedup(
-            stream, str(tmp_path / "index"), str(tmp_path / "pairs"), ck
-        )
-        assert q.awaitTermination(300)
 
-    drain(str(tmp_path / "ck1"))
+    ingest(str(tmp_path / "ck1"))
     got = {
         (r["doc_a"], r["doc_b"], r["hamming"])
         for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
@@ -1421,7 +1405,7 @@ def test_streaming_phash_dedup_matches_batch_and_replays_idempotently(
     }
     assert origins == {"increment", "corpus"}
     # replay: fresh checkpoint reprocesses the feed; pair SET unchanged
-    drain(str(tmp_path / "ck2"))
+    ingest(str(tmp_path / "ck2"))
     got2 = {
         (r["doc_a"], r["doc_b"], r["hamming"])
         for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
@@ -1470,3 +1454,58 @@ def test_write_class_feed_empty_class_fails_loudly(spark, tmp_path):
         _write_class_feed(
             df, F.col("doc_id") % 2, 2, str(tmp_path / "feed"), str(tmp_path)
         )
+
+
+def test_write_ordered_feed_replays_in_range_order(spark, tmp_path):
+    """write_ordered_feed stamps strictly increasing mtimes in range order
+    (part-00000 = lowest range), each file sorted within; the
+    one-file-per-trigger tail then replays file = micro-batch, lowest
+    range first."""
+    import os
+
+    feed = str(tmp_path / "feed")
+    # a permutation of 0..299, so the input order is not the key order
+    df = spark.range(0, 300).select((F.col("id") * 7 % 300).alias("k"))
+    assert write_ordered_feed(df, feed, 3, "k") == 3
+    parts = sorted(f for f in os.listdir(feed) if f.endswith(".parquet"))
+    mtimes = [os.path.getmtime(os.path.join(feed, f)) for f in parts]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:]))
+    keys = [
+        [r["k"] for r in spark.read.parquet(os.path.join(feed, f)).collect()]
+        for f in parts
+    ]
+    assert all(ks == sorted(ks) for ks in keys)
+    assert all(a[-1] < b[0] for a, b in zip(keys, keys[1:]))
+
+    batches: list[list[int]] = []
+    drain(
+        read_feed(spark, feed)
+        .writeStream.foreachBatch(
+            lambda b, _bid: batches.append(sorted(r["k"] for r in b.collect()))
+        )
+        .option("checkpointLocation", str(tmp_path / "ck")),
+        300,
+    )
+    assert batches == keys
+
+
+def test_drain_timeout_stops_query_and_restores_shuffle_width(spark, tmp_path):
+    """A drain that outlives its timeout raises TimeoutError with the
+    query STOPPED (nothing left running in the background), and the
+    shuffle width set around it is restored although the block raised."""
+    import time
+
+    feed = str(tmp_path / "feed")
+    write_ordered_feed(spark.range(0, 8), feed, 1, "id")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    writer = (
+        read_feed(spark, feed)
+        .writeStream.foreachBatch(lambda b, _bid: time.sleep(6))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+    )
+    with pytest.raises(TimeoutError, match="did not drain within 2"):
+        with shuffle_partitions(spark, 3):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+            drain(writer, 2)
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
