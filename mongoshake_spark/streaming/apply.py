@@ -37,13 +37,16 @@ Scale notes: the target state lives ON DISK between micro-batches, in a
 parquet layout HASH-BUCKETED on the merge key (``_bucket = pmod(hash(key),
 n_buckets)`` partition column). Each micro-batch:
 
-1. computes the set of buckets its keys hash into,
-2. reads ONLY those ``_bucket=`` partitions back (partition pruning — the
-   literal ``IN`` on the partition column reaches the file index, so
-   untouched buckets are never opened),
-3. MERGEs the batch into that slice,
-4. ``localCheckpoint``s the merged slice (O(slice) — this is also what
-   lets Spark overwrite the same files the slice was read from), and
+1. computes the set of buckets its keys hash into, in its ONE control
+   aggregate (with the max ordinal, DDL rows and unknown-op count),
+2. plans a LAZY read of ONLY those ``_bucket=`` partitions (the literal
+   ``IN`` on the partition column reaches the file index, so untouched
+   buckets are never opened; the schema is cached per kernel, and the
+   instrumentation counts rows from parquet footers — no Spark job),
+3. MERGEs the batch into that slice, still lazily,
+4. ``localCheckpoint``s the merged slice — the batch's one eager job
+   chain, O(slice), and what lets Spark overwrite the same files the
+   slice was read from — and
 5. rewrites ONLY the touched buckets via dynamic partition overwrite (the
    committer stages files and renames on commit, so a crash mid-flush
    leaves each bucket either old or new, never truncated — and either
@@ -68,8 +71,11 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mongoshake_spark.operators import merge
 
@@ -114,6 +120,9 @@ class ApplyKernel:
     mirror: object | None = None
     ddl_log: list[tuple] = field(default_factory=list)
     _state: DataFrame | None = field(default=None, repr=False)
+    # the on-disk state schema (inferred once, or recorded at flush): a
+    # slice read with an explicit schema skips the footer-inference job
+    _state_schema: StructType | None = field(default=None, repr=False)
     _layout_checked: bool = field(default=False, repr=False)
     # Low watermark for tombstone compaction: max ordinal across batches
     # whose flush has committed. Replay (at-least-once) re-delivers only
@@ -125,7 +134,8 @@ class ApplyKernel:
     _watermark: int | None = field(default=None, repr=False)
     _merges_since_truncate: int = field(default=0, repr=False)
     # Instrumentation, refreshed per batch: how many state parquet files the
-    # partition-pruned slice read covered, and how many rows it held. The
+    # partition-pruned slice read covered, and how many rows it held (summed
+    # from those files' footers, so it costs no Spark job). The
     # scale contract (per-batch input ∝ batch, not state) is asserted on
     # these in tests/test_streaming.py.
     last_state_files_read: int = field(default=0, repr=False)
@@ -306,58 +316,52 @@ class ApplyKernel:
         self._write_marker()
 
     def _begin_batch(self, touched_buckets: list[int]) -> None:
-        """Load the slice of state this batch can touch: ONLY the
+        """Plan the slice of state this batch can touch: ONLY the
         ``_bucket=`` partitions its keys hash into. The ``isin`` on the
         partition column is pruned at the file index, so state I/O per
-        batch is O(touched buckets), not O(state)."""
+        batch is O(touched buckets), not O(state). The slice is lazy — it
+        is read once, by ``_flush``'s checkpoint — and the instrumentation
+        counts its rows from the parquet footers, not with a Spark job."""
         self._ensure_layout()
         self.last_state_files_read = 0
         self.last_state_rows_read = 0
-        if self._is_delta:
-            # MERGE INTO reads (and prunes) the target itself; there is
-            # no in-memory slice to stage
-            self._state = None
+        self._state = None
+        if self._is_delta or not self._bucket_dirs():
+            # delta: MERGE INTO reads (and prunes) the target itself;
+            # there is no in-memory slice to stage
             return
-        if not self._bucket_dirs():
-            self._state = None
-            return
-        sliced = (
-            self.spark.read.parquet(self.target_dir)
+        if self._state_schema is None:
+            self._state_schema = self.spark.read.parquet(self.target_dir).schema
+        self._state = (
+            self.spark.read.schema(self._state_schema)
+            .parquet(self.target_dir)
             .filter(F.col("_bucket").isin(touched_buckets))
             .drop("_bucket")
-            .persist()
         )
-        self.last_state_rows_read = sliced.count()
-        self.last_state_files_read = sum(
-            sum(
-                1
-                for f in os.listdir(os.path.join(self.target_dir, d))
-                if f.endswith(".parquet")
-            )
+        touched = set(touched_buckets)
+        files = [
+            os.path.join(self.target_dir, d, f)
             for d in self._bucket_dirs()
-            if int(d.split("=", 1)[1]) in touched_buckets
-        )
-        self._state = sliced
+            if int(d.split("=", 1)[1]) in touched
+            for f in os.listdir(os.path.join(self.target_dir, d))
+            if f.endswith(".parquet")
+        ]
+        self.last_state_files_read = len(files)
+        self.last_state_rows_read = sum(pq.read_metadata(f).num_rows for f in files)
 
     def _apply_segment(self, segment: DataFrame) -> None:
-        """One MERGE into the state (tombstones retained — see
+        """One lazy MERGE into the state (tombstones retained — see
         operators/merge.merge_upsert). This is the format swap point:
         parquet folds into the in-batch slice; delta lands the same
         per-segment fold as a transactional ``MERGE INTO``."""
         if self._is_delta:
             self._apply_segment_delta(segment)
             return
-        new_state = merge.merge_upsert(self._state, segment, self.key, self.val, self.ord)
+        self._state = merge.merge_upsert(self._state, segment, self.key, self.val, self.ord)
         self._merges_since_truncate += 1
         if self._merges_since_truncate >= self.LINEAGE_TRUNCATE_EVERY:
-            staged = new_state.localCheckpoint(eager=True)
+            self._state = self._state.localCheckpoint(eager=True)
             self._merges_since_truncate = 0
-        else:
-            staged = new_state.persist()
-            staged.count()
-        if self._state is not None:
-            self._state.unpersist()
-        self._state = staged
 
     def _apply_segment_delta(self, segment: DataFrame) -> None:
         """The production MERGE INTO (executor/db_writer_bulk.go's ladder
@@ -409,9 +413,10 @@ class ApplyKernel:
         buckets, and this rewrites only those buckets (dynamic partition
         overwrite — untouched ``_bucket=`` directories are never opened).
         A batch with no CRUD rows writes nothing. The ``localCheckpoint``
-        severs the slice's dependency on the very files the overwrite
-        replaces (and is O(slice), the lineage reset the old full re-read
-        used to pay O(state) for).
+        is the batch's one eager job chain: it runs the lazy slice read,
+        merge and compaction once, and severs the result's dependency on
+        the very files the overwrite then replaces — so it must stay
+        before the write.
         """
         if self._is_delta:
             # each segment's MERGE already committed; the flush-time work
@@ -426,23 +431,19 @@ class ApplyKernel:
                     f"AND _bucket IN ({buckets})"
                 )
             return
-        if self._state is None or not touched_buckets:
-            if self._state is not None:
-                self._state.unpersist()
-            self._state = None
+        out, self._state = self._state, None
+        if out is None or not touched_buckets:
             return
-        out = self._state
         if self._watermark is not None:
             # lazy tombstone compaction: this flush rewrites the touched
             # buckets anyway, so dead tombstones in them are dropped for
             # free (see operators/merge.compact for the safety argument)
             out = merge.compact(out, self._watermark, ord_col=self.ord)
-        staged = out.localCheckpoint(eager=True)
-        self._state.unpersist()
-        self._state = None
+        staged = out.localCheckpoint(eager=True).withColumn("_bucket", self._bucket_expr())
+        # the next slice reads what this writes: no schema inference job
+        self._state_schema = staged.schema
         (
-            staged.withColumn("_bucket", self._bucket_expr())
-            .write.mode("overwrite")
+            staged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_bucket")
             .parquet(self.target_dir)
@@ -492,30 +493,28 @@ class ApplyKernel:
                 # M4 audit journal (collector/syncer.go:635-638): append-only
                 # side output of every oplog handled, before filtering.
                 batch.write.mode("append").parquet(self.journal_dir)
+            op = F.col("op")
+            is_crud = op.isin("i", "u", "d")
             # null-safe: for op=NULL `~isin(...)` is NULL and a plain
             # filter would silently DROP the row from every path (not
             # quarantined, not applied) — the W7 contract is that rows
             # which cannot be applied reach the dead-letter table
-            self._quarantine(
-                batch.filter(
-                    ~F.col("op").isin("i", "u", "d", "n", "c")
-                    | F.col("op").isNull()
-                )
-            )
-            ddl_rows = sorted(
-                batch.filter(F.col("op") == "c").select("id", "ts", "ns", "o").collect(),
-                key=lambda r: (r["ts"], r["id"]),
-            )
-            crud = batch.filter(F.col("op").isin("i", "u", "d"))
-            # one job yields both the touched-bucket set and the batch's
-            # max ordinal (the next watermark candidate)
-            per_bucket = (
-                crud.groupBy(self._bucket_expr().alias("_b"))
-                .agg(F.max(self.ord).alias("_m"))
-                .collect()
-            )
-            touched = [r["_b"] for r in per_bucket]
-            batch_max = max((r["_m"] for r in per_bucket), default=None)
+            unknown = ~op.isin("i", "u", "d", "n", "c") | op.isNull()
+            # the batch's one control job: touched buckets (at most
+            # n_buckets), max ordinal (the next watermark candidate), the
+            # DDL rows and the unknown-op count
+            ctl = batch.agg(
+                F.collect_set(F.when(is_crud, self._bucket_expr())).alias("touched"),
+                F.max(F.when(is_crud, F.col(self.ord))).alias("batch_max"),
+                F.collect_list(F.when(op == "c", F.struct("id", "ts", "ns", "o"))).alias("ddl"),
+                F.count(F.when(unknown, 1)).alias("unknown"),
+            ).first()
+            if ctl["unknown"] and self.dead_letter_dir:
+                batch.filter(unknown).write.mode("append").parquet(self.dead_letter_dir)
+            ddl_rows = sorted(ctl["ddl"], key=lambda r: (r["ts"], r["id"]))
+            crud = batch.filter(is_crud)
+            touched = sorted(ctl["touched"])
+            batch_max = ctl["batch_max"]
             if touched:
                 self._begin_batch(touched)
             if self.strict_barriers and ddl_rows:
@@ -593,10 +592,6 @@ class ApplyKernel:
             prev = b
         if occupancy.get(len(bounds), 0) > 0:
             self._apply_segment(crud.filter(pos > lit_bound(prev)))
-
-    def _quarantine(self, unknown: DataFrame) -> None:
-        if self.dead_letter_dir and not unknown.isEmpty():
-            unknown.write.mode("append").parquet(self.dead_letter_dir)
 
 
 def run_incr_sync(

@@ -470,6 +470,138 @@ def test_state_slice_read_is_partition_pruned(spark, tmp_path):
     assert "_bucket" in plan.split("PartitionFilters", 1)[1][:200]
 
 
+# Spark jobs the second batch of the test below runs under AQE: three for
+# the control aggregate (batch cache, map stage, result), the 64-bucket
+# listing job, three for the merge's checkpoint and one bucket write.
+# Materializing the slice or a merged segment again adds jobs past it.
+APPLY_BATCH_JOB_BUDGET = 8
+
+
+def test_apply_batch_job_budget_and_footer_exact_instrumentation(spark, tmp_path):
+    """One eager job chain per micro-batch: a batch over a 64-bucket
+    state stays within the job budget, and the slice instrumentation
+    (counted from parquet footers, no Spark job) equals a Spark count of
+    the touched ``_bucket=`` dirs taken before the batch."""
+    import datetime
+    import os as _os
+
+    t0 = datetime.datetime(2024, 1, 1)
+    schema = (
+        "id long, ts timestamp, user_id long, op string, ns string, "
+        "value double, o string"
+    )
+
+    def mk(rows):
+        return spark.createDataFrame(
+            [
+                (i, t0 + datetime.timedelta(seconds=i), k, op, "db0.c1", float(i), "{}")
+                for i, k, op in rows
+            ],
+            schema,
+        )
+
+    target = str(tmp_path / "t")
+    kernel = ApplyKernel(spark, target, n_buckets=64)
+    kernel.process_batch(mk([(i, i, "i") for i in range(1, 4001)]), 0)
+    assert len([d for d in _os.listdir(target) if d.startswith("_bucket=")]) == 64
+
+    ops = "uuudicn"
+    second = mk(
+        [(4000 + j, (j * 37) % 4500, ops[j % len(ops)]) for j in range(1, 301)]
+    )
+    touched = sorted(
+        r[0]
+        for r in second.filter(F.col("op").isin("i", "u", "d"))
+        .select(F.pmod(F.hash("user_id"), F.lit(64)))
+        .distinct()
+        .collect()
+    )
+    assert 32 < len(touched) < 64
+    want_rows = spark.read.parquet(target).filter(F.col("_bucket").isin(touched)).count()
+    want_files = sum(
+        1
+        for b in touched
+        for f in _os.listdir(_os.path.join(target, f"_bucket={b}"))
+        if f.endswith(".parquet")
+    )
+
+    sc = spark.sparkContext
+    sc.setJobGroup("apply-batch-budget", "second apply batch")
+    try:
+        kernel.process_batch(second, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("apply-batch-budget")
+    assert len(jobs) <= APPLY_BATCH_JOB_BUDGET, len(jobs)
+    assert kernel.last_state_rows_read == want_rows
+    assert kernel.last_state_files_read == want_files
+
+    # and the batch applied: last writer by ordinal wins per key
+    model = {i: float(i) for i in range(1, 4001)}
+    for j in range(1, 301):
+        k, op = (j * 37) % 4500, ops[j % len(ops)]
+        if op in "iu":
+            model[k] = float(4000 + j)
+        elif op == "d":
+            model.pop(k, None)
+    assert {r["user_id"]: r["value"] for r in kernel.state_view().collect()} == model
+
+
+def test_strict_barriers_past_lineage_truncation(spark, tmp_path):
+    """Strict mode with more segments in one batch than
+    ``LINEAGE_TRUNCATE_EVERY``: the lazy segment chain, cut by the
+    truncation checkpoint, must reach the last-writer-wins state of a
+    row-at-a-time model and of a coalesced kernel on the same batches,
+    with the DDL log in (ts, id) order."""
+    import datetime
+    import random
+
+    t0 = datetime.datetime(2024, 1, 1)
+    schema = (
+        "id long, ts timestamp, user_id long, op string, ns string, "
+        "value double, o string"
+    )
+    seed_rows = [(i, t0, i - 1, "i", "db0.c1", float(i), "{}") for i in range(1, 5)]
+    crud_ops = "uudiu"
+    rows = []
+    for i in range(5, 65):
+        # ts ties in threes: the barrier order falls back to id
+        ts = t0 + datetime.timedelta(seconds=1 + (i - 5) // 3)
+        op = "c" if i % 4 == 0 else crud_ops[i % len(crud_ops)]
+        rows.append((i, ts, i % 4, op, "db0.c1", float(i), f'{{"n": {i}}}'))
+    random.Random(7).shuffle(rows)
+    seed, batch = spark.createDataFrame(seed_rows, schema), spark.createDataFrame(rows, schema)
+
+    model: dict = {}
+    for i, _ts, k, op, _ns, v, _o in sorted(seed_rows + rows):
+        if op in "iu":
+            model[k] = v
+        elif op == "d":
+            model.pop(k, None)
+    ddl_order = [i for _ts, i in sorted((r[1], r[0]) for r in rows if r[3] == "c")]
+    assert len(ddl_order) >= 10
+
+    strict = ApplyKernel(spark, str(tmp_path / "strict"), strict_barriers=True, n_buckets=4)
+    segments = []
+    orig_seg = strict._apply_segment
+    strict._apply_segment = lambda seg: (segments.append(1), orig_seg(seg))
+    coalesced = ApplyKernel(spark, str(tmp_path / "coalesced"), n_buckets=4)
+    for k in (strict, coalesced):
+        k.process_batch(seed, 0)
+        k.process_batch(batch, 1)
+    assert len(segments) > ApplyKernel.LINEAGE_TRUNCATE_EVERY + 1
+
+    def state(k):
+        return {r["user_id"]: r["value"] for r in k.state_view().collect()}
+
+    assert state(strict) == model
+    assert state(coalesced) == model
+    assert [x[0] for x in strict.ddl_log] == ddl_order
+    assert [x[0] for x in coalesced.ddl_log] == ddl_order
+
+
 def test_flat_layout_migrates_to_bucketed_once(spark, tmp_path):
     """ADVICE round-3: a legacy flat ``*.parquet`` state dir must be
     re-bucketed before the first dynamic flush — otherwise the flat files
