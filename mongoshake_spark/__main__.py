@@ -677,12 +677,12 @@ def main(argv: list[str] | None = None) -> int:
             src = spark.read.parquet(_path(args.source_dir, table))
             dst = spark.read.parquet(_path(args.target_dir, table))
             if key == MULTISET:
+                cols = src.columns
                 src = multiset_form(src)
                 # canonicalize the column ORDER through the source's: the
                 # content rendering is name-sorted inside multiset_form,
                 # and this keeps schema comparison order-insensitive too
-                dst = multiset_form(dst.select(*spark.read.parquet(
-                    _path(args.source_dir, table)).columns))
+                dst = multiset_form(dst.select(*cols))
                 key = "_vkey"
             names = [c for c in src.columns if c != key]
             sig_cols = [F.col(c).cast("string") for c in names]

@@ -8,21 +8,26 @@ the source and issuing a ``find_one(_id)`` round trip per document
 (comparison.py:148-180) — O(N) driver-side lookups, unusable at 100 TB.
 The Spark-first re-expression is a TWO-PHASE bucketed comparison:
 
-1. **Bucket summaries** (one aggregation per side, map-side partial
-   combine): per hash bucket of the key, ``(row count, sum of row
-   signatures)``. The summary table is ``n_buckets`` rows — metadata —
-   regardless of data size; a full outer join of the two summaries names
-   every diverged bucket.
+1. **Bucket summaries** (ONE aggregation over the side-tagged union of
+   both sides, map-side partial combine, one shuffle): per hash bucket of
+   the key and per side, ``(row count, sum of row signatures, sum of
+   their squares)``. The summary is ``n_buckets`` rows — metadata —
+   regardless of data size; the buckets whose two sides disagree are the
+   diverged ones.
 2. **Key-level diff, only inside diverged buckets**: both sides filter to
    the mismatched buckets (an ``isin`` on the tiny bucket list — for an
    in-sync corpus this prunes EVERYTHING and phase 2 touches zero rows),
    then a full outer join on the key classifies each divergent key as
    ``missing_in_dst`` / ``missing_in_src`` / ``differs``.
 
-Everything is dialect-portable so a DuckDB oracle can replay it exactly:
-buckets come from the Knuth multiplicative hash (functions/packing), row
-signatures from the polynomial text hash (functions/texthash) over a
-canonicalized column rendering; sums are exact integer arithmetic.
+The bucket ids are dialect-portable — the Knuth multiplicative hash
+(functions/packing), reproducible in any engine with 64-bit integers — and
+so is the sample cut. The row signature is engine-internal: ``xxhash64``
+(codegen'd, one call per row) over a canonical null-coalesced column
+rendering, reduced mod ``texthash.MOD`` so the moment sums stay exact
+BIGINT arithmetic. No oracle replays a signature: the DuckDB oracles of
+``verify_sync_diff`` and ``repair_plan`` classify keys by comparing the
+columns directly, a hash-free ground truth.
 
 ``sample`` mode is the deterministic ``u(key) < rate`` subset on BOTH
 sides (same Knuth hash as functions/packing.sample_strata), so a sampled
@@ -36,7 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mongoshake_spark.functions.packing import HASH_MOD, knuth_u32
-from mongoshake_spark.functions.texthash import poly_hash_spark
+from mongoshake_spark.functions.texthash import MOD
 
 #: unit separator — cannot occur in the fixture values; keeps ("ab","c")
 #: and ("a","bc") from rendering identically
@@ -44,10 +49,12 @@ _SEP = "\x1f"
 
 
 def row_signature(cols: list[Column | str]) -> Column:
-    """Portable row signature: the polynomial hash of the canonical
-    ``\\x1f``-joined rendering of the given columns. Callers canonicalize
-    lossy types FIRST (e.g. doubles to integer cents) — raw float-to-string
-    rendering differs between engines and is not part of the contract.
+    """Row signature in ``[0, MOD)``: ``pmod(xxhash64(rendering), MOD)`` of
+    the canonical ``\\x1f``-joined rendering of the given columns. The
+    hash is Spark's codegen'd ``xxhash64``, one call per row; it is
+    engine-internal — no oracle replays it (module doc). Callers
+    canonicalize lossy types FIRST (e.g. doubles to integer cents), so
+    equal values render equally on both sides.
 
     Each column is null-coalesced to '' BEFORE joining: ``concat_ws``
     silently DROPS null arguments together with their separator, so
@@ -64,23 +71,7 @@ def row_signature(cols: list[Column | str]) -> Column:
             for c in cols
         ],
     )
-    # bind the rendering once (transforms.bind_command_map pattern): the
-    # polynomial fold references its input per character position
-    return F.get(F.transform(F.array(rendered), _poly_of), F.lit(0))
-
-
-def _poly_of(col: Column) -> Column:
-    """poly_hash of an arbitrary (lambda-bound) string column — the
-    Column form of texthash.poly_hash_spark, which is string-templated on
-    a column NAME and cannot take a lambda variable. Identical integers."""
-    from mongoshake_spark.functions.texthash import MOD
-
-    agg = F.aggregate(
-        F.sequence(F.lit(1), F.length(col)),
-        F.lit(0).cast("bigint"),
-        lambda acc, i: (acc * 31 + F.ascii(F.substring(col, i, F.lit(1)))) % F.lit(MOD),
-    )
-    return F.when(col.isNull() | (F.length(col) == 0), F.lit(0).cast("bigint")).otherwise(agg)
+    return F.pmod(F.xxhash64(rendered), F.lit(MOD))
 
 
 def bucket_of(key_col: Column | str, n_buckets: int) -> Column:
@@ -88,8 +79,8 @@ def bucket_of(key_col: Column | str, n_buckets: int) -> Column:
     in any engine with 64-bit integers (no engine-private hash).
 
     NULL keys hash to the reserved bucket ``-1`` rather than propagating
-    NULL: a NULL bucket id silently drops the row from BOTH phases (the
-    full-outer summary join never matches a NULL bucket, and the phase-2
+    NULL: a NULL bucket id silently drops the row from BOTH phases (a
+    grouping key of NULL never equals a bucket id, and the phase-2
     semi-join's ``_b == bucket`` is null-rejecting too), so a dst-side
     mutation of a NULL-key row would report in_sync — the one failure
     mode a verifier must not have."""
@@ -98,66 +89,74 @@ def bucket_of(key_col: Column | str, n_buckets: int) -> Column:
     )
 
 
+def _moments(on: Column, names: tuple[str, str, str]) -> list[Column]:
+    """``count``, ``sum`` and ``sum of squares mod MOD`` of ``_sig`` over
+    the rows where ``on`` holds — 0, not NULL, when there are none."""
+    sig = F.col("_sig")
+    return [
+        F.count(F.when(on, 1)).alias(names[0]),
+        F.coalesce(F.sum(F.when(on, sig)), F.lit(0)).alias(names[1]),
+        F.coalesce(F.sum(F.when(on, sig * sig % F.lit(MOD))), F.lit(0)).alias(names[2]),
+    ]
+
+
+def _tagged(df: DataFrame, key_col: str, sig: Column, n_buckets: int, is_src: bool) -> DataFrame:
+    """``(bucket, _sig, _is_src)`` per row of one side."""
+    return df.select(
+        bucket_of(key_col, n_buckets).alias("bucket"),
+        sig.alias("_sig"),
+        F.lit(is_src).alias("_is_src"),
+    )
+
+
 def bucket_summary(
     df: DataFrame, key_col: str, sig: Column, n_buckets: int = 1024
 ) -> DataFrame:
-    """Phase 1: ``(bucket, cnt, sig_sum, sig_sq_sum)`` per bucket.
+    """Phase 1 for one side: ``(bucket, cnt, sig_sum, sig_sq_sum)`` per
+    bucket (``diverged_buckets`` computes both sides in one aggregate).
 
-    TWO moments, not one: the polynomial hash is LINEAR in character
-    values, so two same-length rows swapping payloads at aligned
-    positions change their individual hashes while leaving the plain sum
-    exactly unchanged (h_a + h_b is preserved) — a first-moment-only
-    summary provably misses that divergence (pinned by
+    TWO moments, as cheap defence: a same-bucket payload swap changes the
+    rows' signatures, and with a non-linear hash a plain sum that stays
+    equal is a coincidence of the hash — but the second moment costs one
+    multiply per row and makes an equal ``(count, sum)`` from an unequal
+    multiset need a second, independent coincidence (pinned by
     tests/test_verify.py::test_payload_swap_within_bucket_is_detected).
-    Adding ``sum(h^2 mod M)`` breaks the cancellation: equal sums with an
-    unequal multiset cannot also match on squares unless the hash pairs
-    coincide. Each addend < 1e9+7, so BIGINT overflow needs ~9e9 rows in
-    ONE bucket — size ``n_buckets`` accordingly, the same sizing exercise
-    as any aggregate."""
-    from mongoshake_spark.functions.texthash import MOD
-
+    Each addend is below MOD (1e9+7), so BIGINT overflow needs ~9e9 rows
+    in ONE bucket — size ``n_buckets`` accordingly, the same sizing
+    exercise as any aggregate."""
     return (
-        df.select(bucket_of(key_col, n_buckets).alias("bucket"), sig.alias("_sig"))
+        _tagged(df, key_col, sig, n_buckets, True)
         .groupBy("bucket")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum("_sig").alias("sig_sum"),
-            F.sum((F.col("_sig") * F.col("_sig")) % F.lit(MOD)).alias("sig_sq_sum"),
-        )
+        .agg(*_moments(F.lit(True), ("cnt", "sig_sum", "sig_sq_sum")))
     )
 
 
 def diverged_buckets(
     src: DataFrame, dst: DataFrame, key_col: str, sig: Column, n_buckets: int = 1024
 ) -> DataFrame:
-    """Buckets whose (count, signature-sum) differ between the two sides:
-    ``(bucket, src_cnt, dst_cnt, src_sum, dst_sum)``. Empty = in sync
-    (up to the signature's collision bound)."""
-    a = bucket_summary(src, key_col, sig, n_buckets)
-    b = bucket_summary(dst, key_col, sig, n_buckets)
-    sa = a.select(
-        "bucket",
-        F.col("cnt").alias("src_cnt"),
-        F.col("sig_sum").alias("src_sum"),
-        F.col("sig_sq_sum").alias("src_sq"),
-    )
-    sb = b.select(
-        "bucket",
-        F.col("cnt").alias("dst_cnt"),
-        F.col("sig_sum").alias("dst_sum"),
-        F.col("sig_sq_sum").alias("dst_sq"),
-    )
-    joined = sa.join(sb, "bucket", "full_outer").select(
-        "bucket",
-        *[
-            F.coalesce(c, F.lit(0)).alias(c)
-            for c in ("src_cnt", "dst_cnt", "src_sum", "dst_sum", "src_sq", "dst_sq")
-        ],
-    )
-    return joined.filter(
-        (F.col("src_cnt") != F.col("dst_cnt"))
-        | (F.col("src_sum") != F.col("dst_sum"))
-        | (F.col("src_sq") != F.col("dst_sq"))
+    """Buckets whose (count, signature sum, signature square sum) differ
+    between the two sides: ``(bucket, src_cnt, dst_cnt, src_sum, dst_sum,
+    src_sq, dst_sq)``. Empty = in sync (up to the signature's collision
+    bound).
+
+    ONE aggregate over the side-tagged union of both sides — one shuffle,
+    no join. A bucket present on one side only has zero moments on the
+    other, so it diverges and phase 2 reports each of its rows."""
+    is_src = F.col("_is_src")
+    return (
+        _tagged(src, key_col, sig, n_buckets, True)
+        .unionAll(_tagged(dst, key_col, sig, n_buckets, False))
+        .groupBy("bucket")
+        .agg(
+            *_moments(is_src, ("src_cnt", "src_sum", "src_sq")),
+            *_moments(~is_src, ("dst_cnt", "dst_sum", "dst_sq")),
+        )
+        .filter(
+            (F.col("src_cnt") != F.col("dst_cnt"))
+            | (F.col("src_sum") != F.col("dst_sum"))
+            | (F.col("src_sq") != F.col("dst_sq"))
+        )
+        .select("bucket", "src_cnt", "dst_cnt", "src_sum", "dst_sum", "src_sq", "dst_sq")
     )
 
 
@@ -189,7 +188,7 @@ def verify_sync(
     when given, else the string entries of ``sig_cols`` (Column entries
     fall back to ``col_<i>``).
 
-    Scale shape: phase 1 is two aggregates + a bucket-count-sized join;
+    Scale shape: phase 1 is one aggregate over both sides (one shuffle);
     phase 2 filters both sides to the diverged buckets — broadcast of a
     metadata-sized bucket list, pruning everything when in sync — and
     joins only those rows on the key. The reference tool's per-document
@@ -226,7 +225,7 @@ def verify_sync(
             ]
         per_col = F.array(
             *[
-                _poly_of(
+                F.xxhash64(
                     F.coalesce(
                         (F.col(c) if isinstance(c, str) else c).cast("string"),
                         F.lit(""),

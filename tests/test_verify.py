@@ -2,9 +2,12 @@
 
 Pins: in-sync emptiness, exact diff recovery (drop/mutate/extra), the
 payload-swap case that motivates keyed signatures, deterministic sample
-mode, and the phase-2 prune plan shape."""
+mode, the phase-2 prune plan shape, and the job budget and plan shape of
+an in-sync verification."""
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import functions as F
 
@@ -53,11 +56,12 @@ def test_exact_diff_recovery(spark, sf_dir):
 
 def test_payload_swap_within_bucket_is_detected(spark):
     """Two same-length keys in the SAME bucket swapping payloads leave
-    count AND the plain signature sum unchanged — the polynomial hash is
-    linear in character values, so aligned-position swaps cancel exactly
-    in the first moment even with the key prepended (this test FAILED
-    against a sum-only summary). The quadratic moment (sum of h^2 mod M)
-    in bucket_summary is what makes phase 1 see it."""
+    the bucket's count and its multiset of payloads unchanged. The key is
+    prepended to the signature rendering, so the swap changes both rows'
+    signatures and phase 1 sees it through the signature sum; the
+    quadratic moment (sum of h^2 mod M) in bucket_summary is a second,
+    independent defence, the one that catches the swap for any hash that
+    is linear in character values."""
     rows = [(i, f"name{i}", "SEG") for i in range(20)]
     src = spark.createDataFrame(rows, "c_custkey bigint, c_name string, c_mktsegment string")
     # swap payloads of keys 3 and 7 with ONE bucket for everything, so the
@@ -112,6 +116,48 @@ def test_phase2_prunes_to_diverged_buckets(spark, sf_dir):
     )
     assert "LeftSemi" in plan
     assert "Broadcast" in plan
+
+
+#: jobs one in-sync ``verify_sync(...).count()`` of two parquet copies
+#: may run: phase 1's aggregate (one shuffle) and the broadcast of its
+#: empty bucket list, then the pruned phase 2 (measured, Spark 4.1)
+VERIFY_JOB_BUDGET = 3
+
+
+def _plan_nodes(df) -> list[str]:
+    """Operator names of ``df``'s optimized logical plan, one per node."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [m.group(1) for m in re.finditer(r"(?m)^[\s:+-]*(\w+)", plan)]
+
+
+def test_in_sync_verify_job_budget_and_plan_shape(spark, sf_dir, tmp_path):
+    """Phase 1 is ONE aggregate over the side-tagged union of both sides
+    (no summary join), and the row signature is a codegen'd hash — no
+    higher-order function, which Spark evaluates per element without
+    codegen. The pair is two parquet copies, as the CLI reads them, so
+    identical plans cannot share an exchange."""
+    _customer(spark, sf_dir).write.parquet(str(tmp_path / "src"))
+    _customer(spark, sf_dir).write.parquet(str(tmp_path / "dst"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    dst = spark.read.parquet(str(tmp_path / "dst"))
+
+    diff = verify_sync(src, dst, "c_custkey", SIG, n_buckets=32)
+    assert "lambdafunction" not in diff._jdf.queryExecution().optimizedPlan().toString()
+    sig = row_signature([F.col("c_custkey").cast("string"), *SIG])
+    nodes = _plan_nodes(diverged_buckets(src, dst, "c_custkey", sig, 32))
+    assert nodes.count("Aggregate") == 1, nodes
+    assert "Join" not in nodes, nodes
+
+    sc = spark.sparkContext
+    sc.setJobGroup("verify-budget", "in-sync verify_sync")
+    try:
+        assert diff.count() == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("verify-budget")
+    assert len(jobs) <= VERIFY_JOB_BUDGET, len(jobs)
 
 
 def test_bucket_summary_is_metadata_sized(spark, sf_dir):
